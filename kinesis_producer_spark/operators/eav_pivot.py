@@ -10,8 +10,8 @@ schema (streaming-safe) that still preserves the reference's
 
 Dynamic mode mirrors ``SignalFlattener`` (reference
 file_flattener.py:119-145): the column set is the union of attribute
-names actually present (two passes: a cheap distinct over the names,
-then the same projection path).
+names actually present, found with the UoM-carrying names in one
+discovery pass (``distinct_keys``), then the declared projection path.
 
 Implementation: ``map_from_entries`` + per-key ``getItem`` — entirely
 JVM-side, **zero shuffle** (the readings are already on their row;
@@ -112,6 +112,28 @@ def pivot_declared(
     return df.select("*", *cols)
 
 
+def distinct_keys(df: DataFrame, **keys: Column) -> dict[str, list[str]]:
+    """Sorted distinct non-null elements of each string-array column in
+    ``keys``, in ONE execution: tag each array with its keyword, concat,
+    explode, one distinct + collect. Bounded by the key vocabulary, not
+    the data size, so the driver action is safe at any scale."""
+    empty = F.array().cast("array<string>")
+    tagged = F.concat(*[
+        F.transform(F.coalesce(arr, empty), lambda k: F.struct(F.lit(tag).alias("tag"), k.alias("key")))
+        for tag, arr in keys.items()
+    ])
+    found = sorted(df.select(F.inline(tagged)).where(F.col("key").isNotNull()).distinct().collect())
+    return {tag: [k for t, k in found if t == tag] for tag in keys}
+
+
+def reading_keys(readings: Column) -> dict[str, Column]:
+    """``distinct_keys`` arguments for a dynamic pivot: reading names, names with a UoM."""
+    return {
+        "names": F.transform(readings, lambda x: x["name"]),
+        "uoms": F.transform(F.filter(readings, lambda x: x["uom"].isNotNull()), lambda x: x["name"]),
+    }
+
+
 def pivot_dynamic(
     df: DataFrame,
     readings_col: str | Column = "readings",
@@ -119,10 +141,9 @@ def pivot_dynamic(
 ) -> DataFrame:
     """Accreting-schema EAV pivot: columns = distinct attribute names.
 
-    Pass 1 is a distinct over exploded names only (tiny shuffle — the
-    key domain, not the data); pass 2 reuses the zero-shuffle getItem
-    path. The collected key set is bounded by the attribute vocabulary,
-    not the data size, so the driver action is safe at any scale.
+    One discovery execution (``distinct_keys`` over the names and the
+    UoM-carrying names — the key domain, not the data), then the
+    zero-shuffle getItem path of ``pivot_declared``.
 
     BATCH ONLY: discovering the attribute vocabulary requires an
     action over the input, which Spark forbids on a stream (a stream's
@@ -139,31 +160,8 @@ def pivot_dynamic(
             "with an explicit declared schema on streams"
         )
     readings = F.col(readings_col) if isinstance(readings_col, str) else readings_col
-    names = sorted(
-        r[0]
-        for r in df.select(
-            F.explode(F.transform(readings, lambda x: x["name"])).alias("n")
-        )
-        .where(F.col("n").isNotNull())
-        .distinct()
-        .collect()
-    )
-    with_uom = sorted(
-        r[0]
-        for r in df.select(
-            F.explode(
-                F.transform(
-                    F.filter(readings, lambda x: x["uom"].isNotNull()), lambda x: x["name"]
-                )
-            ).alias("n")
-        )
-        .where(F.col("n").isNotNull())
-        .distinct()
-        .collect()
-    )
-    return pivot_declared(
-        df, readings, declared=names, uom_for=with_uom, keep_extras=False
-    )
+    keys = distinct_keys(df, **reading_keys(readings))
+    return pivot_declared(df, readings, declared=keys["names"], uom_for=keys["uoms"], keep_extras=False)
 
 
 def melt(

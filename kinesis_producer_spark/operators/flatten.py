@@ -8,14 +8,18 @@ half: explode the array, spread the document scalars onto every row
 (the reference's parent-attr denormalization, file_flattener.py:82),
 and widen the per-component field maps to columns.
 
-Column discovery (dynamic schema) is a distinct over map keys — the
-key *vocabulary*, not the data — so the driver action stays O(schema).
+Column discovery (dynamic schema) is one execution over the document
+and component map keys (``eav_pivot.distinct_keys``) — the key
+*vocabulary*, not the data — so the driver action stays O(schema);
+over ``pipelines.flatten_day``'s persisted parse it parses no XML again.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from kinesis_producer_spark.operators.eav_pivot import distinct_keys
 
 
 def flatten_components(
@@ -35,21 +39,12 @@ def flatten_components(
     comp = F.explode("components").alias("component")
     exploded = parsed.select(*id_cols, "doc_attrs", comp)
 
-    if field_cols is None:
-        field_cols = sorted(
-            r[0]
-            for r in exploded.select(F.explode(F.map_keys("component.fields")).alias("k"))
-            .distinct()
-            .collect()
-        )
-    doc_keys = sorted(
-        r[0]
-        for r in exploded.select(F.explode(F.map_keys("doc_attrs")).alias("k")).distinct().collect()
-    )
+    keys = distinct_keys(exploded, doc=F.map_keys("doc_attrs"), fields=F.map_keys("component.fields"))
+    field_cols = keys["fields"] if field_cols is None else field_cols
 
     cols = [*id_cols]
     # document-level scalars broadcast onto every component row
-    cols += [F.col("doc_attrs").getItem(k).alias(k) for k in doc_keys]
+    cols += [F.col("doc_attrs").getItem(k).alias(k) for k in keys["doc"]]
     cols += [F.col("component.fields").getItem(k).alias(k) for k in field_cols]
     cols += [F.col("component.parent_code").alias("parent_code")]
     if include_depth:

@@ -101,37 +101,41 @@ def flatten_day(
     Signal types pivot the EAV readings (dynamic schema, reference
     SignalFlattener); ``vehicleComponent`` flattens the recursive tree
     (reference VehicleComponentFlattener). FAILFAST matches the
-    reference's strict ValueError behavior."""
-    from kinesis_producer_spark.operators.eav_pivot import pivot_dynamic
+    reference's strict ValueError behavior.
+
+    Parse once: the parsed columns (not the payload) are persisted with
+    ``_corrupt_record``, ONE execution over them finds every column
+    vocabulary, and the write reads the same cache. Filling the cache
+    runs the FAILFAST probe, so a malformed record raises before any
+    write."""
+    from kinesis_producer_spark.operators.eav_pivot import distinct_keys, pivot_declared, reading_keys
     from kinesis_producer_spark.operators.flatten import flatten_components
     from kinesis_producer_spark.sinks import write_hive_partitioned_csv
-    from kinesis_producer_spark.sources.xml import (
-        parse_component_docs,
-        parse_signal_messages,
-    )
+    from kinesis_producer_spark.sources.xml import parse_component_docs, parse_signal_messages
 
     validate_arg(reading_type, READING_TYPES, "reading_type")
     raw = spark.read.json(
         _slice_path(src_root, reading_type, year, month, day),
         schema="payload string, tenant_id string, partition_id string",
     )
-    if reading_type in SIGNALS:
-        parsed = parse_signal_messages(raw, "payload", mode="FAILFAST")
-        wide = pivot_dynamic(parsed)
-        envelope_keys = sorted(
-            r[0]
-            for r in parsed.select(F.explode(F.map_keys("envelope")).alias("k")).distinct().collect()
+    signal = reading_type in SIGNALS
+    parse = parse_signal_messages if signal else parse_component_docs
+    parsed = parse(raw, "payload", mode="FAILFAST").drop(*raw.columns).persist()
+    try:
+        if signal:
+            keys = distinct_keys(parsed, envelope=F.map_keys("envelope"), **reading_keys(F.col("readings")))
+            wide = pivot_declared(parsed, declared=keys["names"], uom_for=keys["uoms"], keep_extras=False)
+            flat = wide.select(
+                *[F.col("envelope").getItem(k).alias(k) for k in keys["envelope"]],
+                *[c for c in wide.columns if c not in raw.columns and c not in parsed.columns],
+            )
+        else:
+            flat = flatten_components(parsed)
+        write_hive_partitioned_csv(
+            flat, _slice_path(dst_root, reading_type, year, month, day), quote_all=True
         )
-        flat = wide.select(
-            *[F.col("envelope").getItem(k).alias(k) for k in envelope_keys],
-            *[c for c in wide.columns if c not in raw.columns and c not in ("envelope", "readings", "_corrupt_record")],
-        )
-    else:
-        parsed = parse_component_docs(raw, "payload", mode="FAILFAST")
-        flat = flatten_components(parsed)
-    write_hive_partitioned_csv(
-        flat, _slice_path(dst_root, reading_type, year, month, day), quote_all=True
-    )
+    finally:
+        parsed.unpersist()
 
 
 def produce_day(
@@ -159,7 +163,8 @@ def produce_day(
         schema="payload string, tenant_id string, partition_id string",
     )
     parsed = parse_signal_messages(raw, "payload", mode="FAILFAST")
-    timed = parsed.select(
+    # filter, not only project: a projection alone prunes the FAILFAST probe
+    timed = parsed.where(F.col("_corrupt_record").isNull()).select(
         F.to_timestamp(F.col("envelope").getItem(ts_col_from_envelope)).alias("ts"),
         "payload",
         F.col("partition_id").alias("partition_key"),
