@@ -18,7 +18,7 @@ artifact against a retrain over the drifted corpus.
 
 Format: ONE JSON file, integers only (every quantizer in this engine
 is integer-exact end to end — micro-int centroids, micro-int
-sub-codebooks), sorted keys, written atomically (tmp + rename), so a
+sub-codebooks), sorted keys, written by ``commit.write_atomic``, so a
 round-trip is bit-identical by construction and a crashed writer
 never leaves a half-readable artifact. Protocol metadata (Lloyd
 rounds, sample spec, m_dims, cell/probe counts) rides along so a
@@ -32,9 +32,10 @@ from __future__ import annotations
 import hashlib
 import json
 import os
-import shutil
 import tempfile
 import uuid
+
+from kinesis_producer_spark.commit import publish_dir, write_atomic
 
 FORMAT_VERSION = 1
 
@@ -89,17 +90,8 @@ def write_codebook(
         "sq8_ranges": rng_rows,
         "meta": dict(meta or {}),
     }
-    # Unique tmp per writer: the artifact cache is cross-process, so
-    # two racing trainers sharing one fixed tmp path could interleave
-    # truncate/buffered writes and publish a torn file via rename.
-    tmp = f"{path}.tmp-{uuid.uuid4().hex}"
-    try:
-        with open(tmp, "w") as fh:
-            json.dump(doc, fh, sort_keys=True, separators=(",", ":"))
-        os.replace(tmp, path)
-    finally:
-        if os.path.exists(tmp):
-            os.unlink(tmp)
+    # atomic: the artifact cache is cross-process (racing trainers)
+    write_atomic(path, json.dumps(doc, sort_keys=True, separators=(",", ":")))
 
 
 def read_codebook(path: str) -> dict:
@@ -201,8 +193,5 @@ def cached_index_dir(
         return path
     tmp = f"{path}.build-{uuid.uuid4().hex[:8]}"
     builder(tmp)
-    try:
-        os.rename(tmp, path)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # a racing builder won
+    publish_dir(tmp, path)
     return path

@@ -100,32 +100,24 @@ def compact_small_files(
     many small files, every later scan pays per-file open cost, and
     compaction restores the scan-side batch-size invariant. The
     rewrite is one repartition job (size-based file count, same
-    discipline as ``repartition_by_bytes``); a swap-on-commit rename
-    pair means readers never see *partial* data — at worst a brief
-    ENOENT between the two renames — and an interrupted run is healed
-    (restore-or-discard) at the start of the next invocation. Returns
+    discipline as ``repartition_by_bytes``); ``commit.swap_dir``
+    publishes it with two renames, not atomically: a reader in the gap
+    sees a brief, retryable ENOENT, never *partial* data, and
+    ``commit.heal_swap`` restores or discards an interrupted run's
+    residue at the start of the next invocation. Returns
     {files_before, files_after, bytes} for the caller's ledger.
 
     Skips (no-op) when the dataset already has < ``min_files`` files.
     """
     import math
     import os
-    import shutil
+
+    from kinesis_producer_spark.commit import heal_swap, swap_dir
 
     tmp = path.rstrip("/") + "._compacting"
     old = path.rstrip("/") + "._old"
-    # Crash recovery from a previous interrupted run BEFORE doing any
-    # work: a surviving ._old with no live dataset means the crash hit
-    # between the two renames — restore it; a surviving ._old alongside
-    # a live dataset means the crash hit after the swap — drop it; a
-    # stale ._compacting is always discardable (pre-commit state).
-    if os.path.exists(old):
-        if os.path.exists(path):
-            shutil.rmtree(old)
-        else:
-            os.rename(old, path)
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp)
+    # recover an interrupted previous run BEFORE doing any work
+    heal_swap(path, tmp, old)
 
     ext = "." + fmt
     files = []
@@ -137,12 +129,7 @@ def compact_small_files(
     n_out = max(1, math.ceil(total / target_bytes))
     df = getattr(spark.read, fmt)(path)
     getattr(df.repartition(n_out).write.mode("overwrite"), fmt)(tmp)
-    # Two renames, not atomic: a reader in the gap sees ENOENT briefly
-    # (retryable) rather than partial data; a crash in the gap is
-    # healed by the recovery block above on the next invocation.
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
+    swap_dir(path, tmp, old, op="compact_small_files")
     out_files = [
         os.path.join(r, f)
         for r, _d, ns in os.walk(path)
@@ -184,6 +171,8 @@ def write_with_manifest(
     """
     import json
     import os
+
+    from kinesis_producer_spark.commit import write_atomic
 
     w = df.write.mode(mode)
     if partition_by:
@@ -229,11 +218,14 @@ def write_with_manifest(
             "name_tag": tag,
         }
         if rename_parts:
+            # a rename inside the freshly written dataset, not a publish:
+            # the manifest below is what declares the output complete
             new_path = os.path.join(os.path.dirname(p), tag + ext)
             os.rename(p, new_path)
             entry["file"] = os.path.relpath(new_path, path)
         entries.append(entry)
-    with open(os.path.join(path, "_manifest.jsonl"), "w") as fh:
-        for e in entries:
-            fh.write(json.dumps(e) + "\n")
+    write_atomic(
+        os.path.join(path, "_manifest.jsonl"),
+        "".join(json.dumps(e) + "\n" for e in entries),
+    )
     return entries

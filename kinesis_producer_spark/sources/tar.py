@@ -197,16 +197,14 @@ def write_tar_shards(
     (executor-side writes; the driver never sees shard bytes)."""
     import os
 
+    from kinesis_producer_spark.commit import write_atomic
+
     shards = pack_tar_shards(df, key_col, content_col, n_shards)
 
     def land(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             for sid, blob in zip(pdf["shard_id"], pdf["tar_bytes"]):
-                target = os.path.join(path, f"shard-{int(sid):05d}.tar")
-                tmp = target + ".inprogress"
-                with open(tmp, "wb") as f:
-                    f.write(bytes(blob))
-                os.replace(tmp, target)  # rename-on-commit
+                write_atomic(os.path.join(path, f"shard-{int(sid):05d}.tar"), bytes(blob))
             yield pd.DataFrame({"n": [len(pdf)]})
 
     os.makedirs(path, exist_ok=True)

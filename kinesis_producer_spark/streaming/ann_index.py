@@ -7,8 +7,9 @@ against the FROZEN build-time codebook (and frozen trained quantizer,
 when the index was built with one — the q255 contract: codebook drift
 is a REBUILD decision gated by the q253/q258 recall harness, never an
 append-path mutation) and lands the codes inside the index's physical
-partition layout, under the same epoch-commit ledger discipline as the
-Kinesis sink (streaming/kinesis_sink.py foreach_batch_writer):
+partition layout, under the same epoch-commit ledger as the Kinesis
+sink (``commit.EpochLedger``, shared with streaming/kinesis_sink.py
+foreach_batch_writer):
 
 - layout: ``cell=X/epoch=N/`` — cell first, so serving keeps its
   probe-list partition pruning (q254's pinned property); epoch second,
@@ -31,19 +32,29 @@ Kinesis sink (streaming/kinesis_sink.py foreach_batch_writer):
   same epoch_id after a post-write/pre-checkpoint failure) is skipped
   via the marker, the sink's ledger shape exactly.
 
-Local-FS marker atomics here, as in the Kinesis sink; an object-store
-deployment swaps in a conditional-put ledger on the same layout.
+The ledger, the maintenance lock and the directory swap live in
+``kinesis_producer_spark/commit.py``; index and results paths go
+through its ``local_root``, so a ``file://`` URI lands data and ledger
+in the same directory and a remote URI is rejected before any write.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_LEDGER = "_epoch_ledger"
-BOOTSTRAP_EPOCH = -1
+from kinesis_producer_spark.commit import (
+    FIRST_EPOCH,
+    EpochLedger,
+    LedgerState,
+    maintenance_lock,
+    swap_dir,
+)
+
+BOOTSTRAP_EPOCH = FIRST_EPOCH
 # Tombstones ride the SAME cell=/epoch= layout as code rows, under a
 # reserved cell id (real cells are non-negative in both quantizers):
 # a tombstone (vec_id, epoch=t) suppresses that vector's code rows
@@ -53,13 +64,18 @@ BOOTSTRAP_EPOCH = -1
 TOMBSTONE_CELL = -1
 
 
-def _cell_and_codes(
+def _encode(
+    df: DataFrame,
     codebook: list[list[int]],
     centroids: list[list[int]] | None,
     bits: int,
     m_dims: int,
+    id_col: str,
     emb_col: str,
-):
+    epoch: int,
+) -> DataFrame:
+    """``df``'s vectors as (vec_id, cell, codes, epoch) code rows,
+    encoded against the frozen quantizers."""
     from kinesis_producer_spark.operators.similarity import (
         _pq_expr_parts,
         _trained_parts,
@@ -67,11 +83,22 @@ def _cell_and_codes(
     )
 
     codes_fn, _, _ = _pq_expr_parts(codebook, m_dims)
-    if centroids is not None:
-        cell_col = _trained_parts(centroids)[0](F.col(emb_col))
-    else:
-        cell_col = ivf_cell(F.col(emb_col), bits)
-    return cell_col, codes_fn(F.col(emb_col))
+    emb = F.col(emb_col)
+    cell_col = (
+        _trained_parts(centroids)[0](emb) if centroids is not None else ivf_cell(emb, bits)
+    )
+    return df.select(
+        F.col(id_col).alias("vec_id"),
+        cell_col.alias("cell"),
+        codes_fn(emb).alias("codes"),
+        F.lit(epoch).alias("epoch"),
+    )
+
+
+def _write_cells(rows: DataFrame, path: str) -> None:
+    # cluster by cell first — one file per cell dir instead of
+    # tasks×cells small files (the ivf_pq_write_index fix)
+    rows.repartition("cell").write.mode("overwrite").partitionBy("cell", "epoch").parquet(path)
 
 
 def bootstrap_index(
@@ -94,110 +121,68 @@ def bootstrap_index(
     different physical layout."""
     from kinesis_producer_spark.operators.similarity import _collect_codebook
 
+    ledger = EpochLedger(index_path)
     cb = (
         codebook
         if codebook is not None
         else _collect_codebook(corpus, id_col, emb_col, n_centroids)
     )
-    cell_col, codes_col = _cell_and_codes(cb, centroids, bits, m_dims, emb_col)
-    (
-        corpus.select(
-            F.col(id_col).alias("vec_id"),
-            cell_col.alias("cell"),
-            codes_col.alias("codes"),
-            F.lit(BOOTSTRAP_EPOCH).alias("epoch"),
-        )
-        # cluster by cell first — one file per cell dir instead of
-        # tasks×cells small files (the ivf_pq_write_index fix)
-        .repartition("cell")
-        .write.mode("overwrite")
-        .partitionBy("cell", "epoch")
-        .parquet(index_path)
+    _write_cells(
+        _encode(corpus, cb, centroids, bits, m_dims, id_col, emb_col, BOOTSTRAP_EPOCH),
+        ledger.root,
     )
-    _commit_marker(index_path, BOOTSTRAP_EPOCH)
+    ledger.commit(BOOTSTRAP_EPOCH)
     return cb
 
 
-def _marker(index_path: str, epoch_id: int) -> str:
-    return os.path.join(index_path, _LEDGER, f"epoch-{epoch_id}")
-
-
-def _hwm_path(index_path: str, epoch_id: int) -> str:
-    return os.path.join(index_path, _LEDGER, f"hwm-{epoch_id}")
-
-
 def _commit_marker(index_path: str, epoch_id: int) -> None:
-    os.makedirs(os.path.join(index_path, _LEDGER), exist_ok=True)
-    with open(_marker(index_path, epoch_id), "x") as fh:
-        fh.write("committed")
+    EpochLedger(index_path).commit(epoch_id)
 
 
-def _ledger_state(index_path: str) -> tuple[int | None, list[int]]:
-    """(hwm, extras): ``hwm=N`` asserts every epoch in
-    [BOOTSTRAP_EPOCH, N] is committed (written only by
-    ``compact_ledger``, which verifies contiguity first); ``extras``
-    are the per-epoch markers above it. Bounded driver control data
-    either way — compaction keeps it bounded by the number of
-    IN-FLIGHT epochs instead of the stream's lifetime."""
-    d = os.path.join(index_path, _LEDGER)
-    if not os.path.isdir(d):
-        return None, []
-    hwm = None
-    extras = []
-    for name in os.listdir(d):
-        if name.startswith("hwm-"):
-            v = int(name[len("hwm-"):])
-            hwm = v if hwm is None else max(hwm, v)
-        elif name.startswith("epoch-"):
-            extras.append(int(name[len("epoch-"):]))
-    if hwm is not None:
-        extras = [e for e in extras if e > hwm]
-    return hwm, sorted(extras)
+def _ledger_state(index_path: str) -> LedgerState:
+    return EpochLedger(index_path).state()
 
 
 def is_committed(index_path: str, epoch_id: int) -> bool:
-    hwm, _ = _ledger_state(index_path)
-    if hwm is not None and epoch_id <= hwm:
-        return True
-    return os.path.exists(_marker(index_path, epoch_id))
+    return EpochLedger(index_path).committed(epoch_id)
 
 
 def compact_ledger(index_path: str) -> int | None:
     """Fold the contiguous committed prefix into ONE high-watermark
-    marker (``hwm-N`` = "all epochs ≤ N committed") and delete the
-    per-epoch markers it covers, so a long-lived stream's serving
+    marker (``EpochLedger.fold``), so a long-lived stream's serving
     filter stays ``epoch <= N OR epoch IN (few)`` instead of an
     IN-list and a ledger listing that grow one entry per micro-batch
-    for the stream's lifetime (round-8 ADVICE). Only a VERIFIED
-    contiguous run starting at the existing floor is folded — a gap
-    (a crashed, not-yet-replayed epoch) stops the watermark below it,
-    so the hwm never claims an uncommitted epoch. Returns the new
-    watermark (None when nothing is compactable). Safe to call any
-    time — markers are only removed AFTER the hwm marker exists, so a
-    crash mid-compaction leaves a superset of the committed facts."""
-    hwm, extras = _ledger_state(index_path)
-    floor = hwm if hwm is not None else BOOTSTRAP_EPOCH - 1
-    new = floor
-    extra_set = set(extras)
-    while new + 1 in extra_set:
-        new += 1
-    if new == floor:
-        return hwm
-    os.makedirs(os.path.join(index_path, _LEDGER), exist_ok=True)
-    with open(_hwm_path(index_path, new), "w") as fh:
-        fh.write("committed-through")
-    if hwm is not None and hwm != new:
-        try:
-            os.remove(_hwm_path(index_path, hwm))
-        except FileNotFoundError:
-            pass
-    for e in extras:
-        if e <= new:
-            try:
-                os.remove(_marker(index_path, e))
-            except FileNotFoundError:
-                pass
-    return new
+    for the stream's lifetime (round-8 ADVICE). Returns the new
+    watermark (None when nothing is compactable); safe to call any
+    time."""
+    return EpochLedger(index_path).fold()
+
+
+def _epoch_writer(path: str, label: str, rows, *partition_by: str):
+    """The exactly-once ``foreachBatch`` shape of every writer here: a
+    replay of a committed epoch is skipped; otherwise the frame
+    ``rows(batch_df, epoch_id)`` (None: nothing to land) is written
+    with DYNAMIC partition overwrite — a replayed uncommitted epoch
+    rewrites exactly its own partitions — and only then is the epoch
+    committed, so the marker makes the epoch visible atomically."""
+    ledger = EpochLedger(path)
+
+    def write(batch_df: DataFrame, epoch_id: int) -> None:
+        epoch_id = int(epoch_id)
+        if ledger.committed(epoch_id):
+            print(f"{label}: epoch {epoch_id} already committed, skipping replay")
+            return
+        out = rows(batch_df, epoch_id)
+        if out is not None:
+            (
+                out.write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy(*partition_by)
+                .parquet(ledger.root)
+            )
+        ledger.commit(epoch_id)
+
+    return write
 
 
 def index_append_writer(
@@ -216,30 +201,10 @@ def index_append_writer(
     epochs overwrite their own partitions — exactly-once appends as
     observed through ``read_committed_index``."""
 
-    def write(batch_df: DataFrame, epoch_id: int) -> None:
-        if is_committed(index_path, int(epoch_id)):
-            print(
-                f"ann index: epoch {epoch_id} already committed, skipping replay"
-            )
-            return
-        cell_col, codes_col = _cell_and_codes(
-            codebook, centroids, bits, m_dims, emb_col
-        )
-        (
-            batch_df.select(
-                F.col(id_col).alias("vec_id"),
-                cell_col.alias("cell"),
-                codes_col.alias("codes"),
-                F.lit(int(epoch_id)).alias("epoch"),
-            )
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("cell", "epoch")
-            .parquet(index_path)
-        )
-        _commit_marker(index_path, int(epoch_id))
+    def rows(batch_df: DataFrame, epoch_id: int) -> DataFrame:
+        return _encode(batch_df, codebook, centroids, bits, m_dims, id_col, emb_col, epoch_id)
 
-    return write
+    return _epoch_writer(index_path, "ann index", rows, "cell", "epoch")
 
 
 def index_upsert_writer(
@@ -281,12 +246,7 @@ def index_upsert_writer(
     corpus-sized work stays in the distributed encode, exactly the
     append writer's shape."""
 
-    def write(batch_df: DataFrame, epoch_id: int) -> None:
-        if is_committed(index_path, int(epoch_id)):
-            print(
-                f"ann index: epoch {epoch_id} already committed, skipping replay"
-            )
-            return
+    def rows(batch_df: DataFrame, epoch_id: int) -> DataFrame:
         ops = {"add", "upsert", "delete"}
         # Both guards in ONE aggregation job (round-10 ADVICE: two
         # eager collects re-evaluated the batch source twice per
@@ -328,31 +288,19 @@ def index_upsert_writer(
                 "before the write (suppression is per-epoch, so duplicates "
                 "would double-serve)"
             )
-        cell_col, codes_col = _cell_and_codes(
-            codebook, centroids, bits, m_dims, emb_col
-        )
-        data = batch_df.filter(F.col(op_col).isin("add", "upsert")).select(
-            F.col(id_col).alias("vec_id"),
-            cell_col.alias("cell"),
-            codes_col.alias("codes"),
-            F.lit(int(epoch_id)).alias("epoch"),
+        data = _encode(
+            batch_df.filter(F.col(op_col).isin("add", "upsert")),
+            codebook, centroids, bits, m_dims, id_col, emb_col, epoch_id,
         )
         tombs = batch_df.filter(F.col(op_col).isin("upsert", "delete")).select(
             F.col(id_col).alias("vec_id"),
             F.lit(TOMBSTONE_CELL).alias("cell"),
             F.lit(None).cast("array<int>").alias("codes"),
-            F.lit(int(epoch_id)).alias("epoch"),
+            F.lit(epoch_id).alias("epoch"),
         )
-        (
-            data.unionByName(tombs)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("cell", "epoch")
-            .parquet(index_path)
-        )
-        _commit_marker(index_path, int(epoch_id))
+        return data.unionByName(tombs)
 
-    return write
+    return _epoch_writer(index_path, "ann index", rows, "cell", "epoch")
 
 
 def _latest_tombstones(committed: DataFrame) -> DataFrame:
@@ -409,9 +357,7 @@ def committed_epochs(index_path: str) -> list[int]:
     epoch. A compacted ledger's watermark expands to its covered range
     (epochs start at BOOTSTRAP_EPOCH and ascend), so callers see the
     same list before and after ``compact_ledger``."""
-    hwm, extras = _ledger_state(index_path)
-    base = list(range(BOOTSTRAP_EPOCH, hwm + 1)) if hwm is not None else []
-    return base + extras
+    return EpochLedger(index_path).state().epochs()
 
 
 def _read_committed(
@@ -432,7 +378,9 @@ def _read_committed(
     (round-9 ADVICE). Readers raise with the recovery fact instead —
     the complete old index survives at ``<path>.precompact`` until
     the swap finishes."""
-    hwm, extras = _ledger_state(path)
+    ledger = EpochLedger(path)
+    path = ledger.root
+    hwm, extras = ledger.state()
     if hwm is None and not extras:
         for residue in (path + ".compacting", path + ".precompact"):
             if os.path.isdir(residue):
@@ -512,41 +460,30 @@ def ann_query_writer(
     (query streams are human/request-scale, not corpus-scale); the
     corpus-sized work stays distributed inside the serving call."""
 
-    def write(batch_df: DataFrame, epoch_id: int) -> None:
-        if is_committed(results_path, int(epoch_id)):
-            print(
-                f"ann results: epoch {epoch_id} already committed, skipping replay"
-            )
-            return
+    def rows(batch_df: DataFrame, epoch_id: int) -> DataFrame | None:
         qids = [r[0] for r in batch_df.select(id_col).collect()]
-        if qids:
-            from kinesis_producer_spark.operators.similarity import (
-                ivf_pq_topk_from_index,
-            )
+        if not qids:
+            return None
+        from kinesis_producer_spark.operators.similarity import (
+            ivf_pq_topk_from_index,
+        )
 
-            spark = batch_df.sparkSession
-            # served view, not the raw committed one: an index kept
-            # fresh by index_upsert_writer must answer queries from
-            # post-suppression rows (a takedown stops being served the
-            # trigger after its epoch commits); on a tombstone-free
-            # index the two views are row-identical, so the q257
-            # oracle contract is unchanged
-            res = ivf_pq_topk_from_index(
-                corpus, index_path, codebook, query_ids=[int(q) for q in qids],
-                k=k, shortlist=shortlist, bits=bits, m_dims=m_dims,
-                id_col=id_col, emb_col=emb_col, centroids=centroids,
-                nprobe=nprobe, adapt_ratio=adapt_ratio,
-                index_df=read_served_index(spark, index_path),
-            ).withColumn("epoch", F.lit(int(epoch_id)))
-            (
-                res.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("epoch")
-                .parquet(results_path)
-            )
-        _commit_marker(results_path, int(epoch_id))
+        spark = batch_df.sparkSession
+        # served view, not the raw committed one: an index kept
+        # fresh by index_upsert_writer must answer queries from
+        # post-suppression rows (a takedown stops being served the
+        # trigger after its epoch commits); on a tombstone-free
+        # index the two views are row-identical, so the q257
+        # oracle contract is unchanged
+        return ivf_pq_topk_from_index(
+            corpus, index_path, codebook, query_ids=[int(q) for q in qids],
+            k=k, shortlist=shortlist, bits=bits, m_dims=m_dims,
+            id_col=id_col, emb_col=emb_col, centroids=centroids,
+            nprobe=nprobe, adapt_ratio=adapt_ratio,
+            index_df=read_served_index(spark, index_path),
+        ).withColumn("epoch", F.lit(epoch_id))
 
-    return write
+    return _epoch_writer(results_path, "ann results", rows, "epoch")
 
 
 def read_committed_results(spark: SparkSession, results_path: str) -> DataFrame:
@@ -590,192 +527,108 @@ def compact_index(spark: SparkSession, index_path: str) -> int:
     (they were never visible) and its replay proceeds normally.
 
     Swap protocol (single-writer maintenance op — ENFORCED, round-9
-    ADVICE): a ``<index>.compact.lock`` sentinel (O_EXCL create) is
-    held for the duration, so a second concurrent compactor fails
-    loudly instead of both racing the swap; and because APPENDERS are
-    deliberately not blocked (a streaming writer must not stall on
-    maintenance), the ledger is re-read TWICE — after the compacted
-    copy is written, and again after the old index is renamed aside
-    (the rename moves data and ledger together, so the second read is
-    race-free against epochs that committed before it): either
-    mismatch ABORTS the swap with the old index back in place (the
-    rewrite would otherwise silently drop that epoch's data files
-    while its marker survived, the ledger claiming data that no
-    longer exists) and the caller retries at a quieter moment. An
-    appender that starts after the rename-aside recreates the path
-    and makes the swap-in rename FAIL LOUDLY (old index intact at
-    ``.precompact``, recovery in the error) — no silent-loss path
-    remains, only a loud abort. The compacted
-    copy is fully written and ledgered at ``<index>.compacting``,
-    then two directory renames swap it in. Local-FS renames give a
-    brief window where the path is absent (readers RAISE via
-    ``_read_committed``'s residue check rather than serving empty);
-    the recovery fact is that ``<index>.precompact`` holds the
-    complete old index until the swap finishes — an object-store
-    deployment swaps a conditional pointer instead, same layout.
-    Returns the new watermark epoch."""
-    lock = _acquire_maintenance_lock(index_path)
-    try:
-        return _compact_index_locked(spark, index_path)
-    finally:
-        os.remove(lock)
+    ADVICE): ``commit.maintenance_lock`` holds ``<index>.compact.lock``
+    for the duration, so a second concurrent compactor fails loudly
+    instead of both racing the swap. APPENDERS are deliberately not
+    blocked (a streaming writer must not stall on maintenance): the
+    compacted copy is fully written and ledgered at
+    ``<index>.compacting`` and published by ``_checked_swap``, whose
+    two ledger rechecks abort on a concurrent commit with the old
+    index back in place (the rewrite would otherwise silently drop
+    that epoch's data files while its marker survived). Mid-swap,
+    readers RAISE via ``_read_committed``'s residue check rather than
+    serving empty; ``<index>.precompact`` holds the complete old index
+    until the swap finishes. Returns the new watermark epoch."""
+    ledger = EpochLedger(index_path)
+    index_path = ledger.root
+    with maintenance_lock(index_path + ".compact.lock"):
+        st = ledger.state()
+        if st.hwm is None and not st.extras:
+            raise ValueError(f"nothing committed under {index_path!r}")
+        new_hwm = st.prefix_end()
+        keep_extras = [e for e in st.extras if e > new_hwm]
+
+        # Tombstone fold (round-10): suppression is applied PHYSICALLY —
+        # a row any committed tombstone suppresses is dropped from the
+        # rewrite (suppression only accrues, so a row suppressed now is
+        # suppressed forever), and tombstones with epoch <= new_hwm are
+        # dropped as fully absorbed (no replay below the watermark can
+        # ever land rows again — is_committed skips it). Epochs ABOVE the
+        # gap are preserved AT THEIR ORIGINAL EPOCH, data and tombstones
+        # both: a tombstone at epoch t > gap must keep suppressing the
+        # gap epoch's rows when that crashed epoch finally replays
+        # (epoch g < t), and an extras data row at epoch e > t must keep
+        # outliving t — folding either into the bootstrap epoch would
+        # corrupt exactly those orderings. Prefix rows fold to ONE file
+        # per cell; no prefix survivor can collide with a kept tombstone
+        # (every prefix epoch < every kept tombstone's epoch, so
+        # suppressed prefix rows of tombstoned vec_ids are already gone).
+        df = read_committed_index(spark, index_path)
+        tombs = df.filter(F.col("cell") == TOMBSTONE_CELL)
+        tomb_keys = tombs.select(
+            F.col("vec_id").alias("_t_vec"), F.col("epoch").alias("_t_epoch")
+        )
+        survivors = df.filter(F.col("cell") != TOMBSTONE_CELL).join(
+            F.broadcast(tomb_keys),
+            (F.col("vec_id") == F.col("_t_vec"))
+            & (F.col("epoch") < F.col("_t_epoch")),
+            "left_anti",
+        )
+        folded = (
+            survivors.filter(F.col("epoch") <= F.lit(new_hwm))
+            .drop("epoch")
+            .withColumn("epoch", F.lit(BOOTSTRAP_EPOCH))
+        )
+        kept = survivors.filter(F.col("epoch") > F.lit(new_hwm)).unionByName(
+            tombs.filter(F.col("epoch") > F.lit(new_hwm))
+        )
+        _swap_in(index_path, folded.unionByName(kept), st, new_hwm, keep_extras, "compact_index")
+        return new_hwm
 
 
-def _acquire_maintenance_lock(index_path: str) -> str:
-    """One maintenance op at a time per index — compact_index and
-    rebuild_index share the SAME ``<index>.compact.lock`` sentinel
-    (O_EXCL create), so a compaction and a rebuild can never race
-    each other's swap. Appenders are deliberately NOT blocked; the
-    swap rechecks handle them (``_checked_swap``)."""
-    lock = index_path + ".compact.lock"
-    try:
-        fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError:
-        raise RuntimeError(
-            f"another maintenance op holds {lock!r} (or crashed holding "
-            "it: remove the lock after verifying no compactor/rebuilder "
-            "is live)"
-        ) from None
-    os.close(fd)
-    return lock
-
-
-def _compact_index_locked(spark: SparkSession, index_path: str) -> int:
-    import shutil
-
-    hwm, extras = _ledger_state(index_path)
-    if hwm is None and not extras:
-        raise ValueError(f"nothing committed under {index_path!r}")
-    floor = hwm if hwm is not None else BOOTSTRAP_EPOCH - 1
-    new_hwm = floor
-    es = set(extras)
-    while new_hwm + 1 in es:
-        new_hwm += 1
-    keep_extras = [e for e in extras if e > new_hwm]
-
-    # Tombstone fold (round-10): suppression is applied PHYSICALLY —
-    # a row any committed tombstone suppresses is dropped from the
-    # rewrite (suppression only accrues, so a row suppressed now is
-    # suppressed forever), and tombstones with epoch <= new_hwm are
-    # dropped as fully absorbed (no replay below the watermark can
-    # ever land rows again — is_committed skips it). Epochs ABOVE the
-    # gap are preserved AT THEIR ORIGINAL EPOCH, data and tombstones
-    # both: a tombstone at epoch t > gap must keep suppressing the
-    # gap epoch's rows when that crashed epoch finally replays
-    # (epoch g < t), and an extras data row at epoch e > t must keep
-    # outliving t — folding either into the bootstrap epoch would
-    # corrupt exactly those orderings. Prefix rows fold to ONE file
-    # per cell; no prefix survivor can collide with a kept tombstone
-    # (every prefix epoch < every kept tombstone's epoch, so
-    # suppressed prefix rows of tombstoned vec_ids are already gone).
-    df = read_committed_index(spark, index_path)
-    tombs = df.filter(F.col("cell") == TOMBSTONE_CELL)
-    tomb_keys = tombs.select(
-        F.col("vec_id").alias("_t_vec"), F.col("epoch").alias("_t_epoch")
-    )
-    survivors = df.filter(F.col("cell") != TOMBSTONE_CELL).join(
-        F.broadcast(tomb_keys),
-        (F.col("vec_id") == F.col("_t_vec"))
-        & (F.col("epoch") < F.col("_t_epoch")),
-        "left_anti",
-    )
-    folded = (
-        survivors.filter(F.col("epoch") <= F.lit(new_hwm))
-        .drop("epoch")
-        .withColumn("epoch", F.lit(BOOTSTRAP_EPOCH))
-    )
-    kept = survivors.filter(F.col("epoch") > F.lit(new_hwm)).unionByName(
-        tombs.filter(F.col("epoch") > F.lit(new_hwm))
-    )
+def _swap_in(
+    index_path: str, rows: DataFrame, snapshot: LedgerState, hwm: int, extras: list[int], op: str
+) -> None:
+    """Write ``rows`` as the complete replacement index (one file per
+    cell, the bootstrap layout) with a fresh ledger at
+    ``<index>.compacting``, then publish it through ``_checked_swap``."""
     tmp = index_path + ".compacting"
     shutil.rmtree(tmp, ignore_errors=True)
-    (
-        folded.unionByName(kept)
-        .repartition("cell")
-        .write.mode("overwrite")
-        .partitionBy("cell", "epoch")
-        .parquet(tmp)
-    )
-    os.makedirs(os.path.join(tmp, _LEDGER), exist_ok=True)
-    with open(_hwm_path(tmp, new_hwm), "w") as fh:
-        fh.write("committed-through")
-    for e in keep_extras:
-        with open(_marker(tmp, e), "x") as fh:
-            fh.write("committed")
-    _checked_swap(index_path, tmp, hwm, extras, op="compact_index")
-    return new_hwm
+    _write_cells(rows, tmp)
+    EpochLedger(tmp).seed(hwm, extras)
+    _checked_swap(index_path, tmp, snapshot, op=op)
 
 
 def _checked_swap(
-    index_path: str,
-    tmp: str,
-    hwm: int | None,
-    extras: list[int],
-    op: str,
+    index_path: str, tmp: str, snapshot: LedgerState, op: str
 ) -> None:
     """The shared maintenance-swap tail (compact_index and
-    rebuild_index): publish the fully-written replacement at ``tmp``
-    (= ``<index>.compacting``) over ``index_path`` with the
-    append-race rechecks. (hwm, extras) is the ledger snapshot the
-    rewrite was computed from.
-
-    Race discipline: the ledger is re-read TWICE — before the
+    rebuild_index): ``commit.swap_dir`` publishes the replacement at
+    ``tmp`` (= ``<index>.compacting``) with ``.precompact`` aside.
+    ``snapshot`` is the ledger state the rewrite was computed from,
+    and the ledger is re-read TWICE against it — before the
     rename-aside (round-9 ADVICE: cheap abort, old index untouched)
     and again AFTER it (round-10 ADVICE: the rename moves data and
     ledger together, so the re-read is race-free against epochs that
     finished committing in between; on mismatch the old index is
-    SWAPPED BACK in place and the caller retries). An appender that
-    starts after the rename-aside recreates ``index_path`` fresh and
-    makes the swap-in rename fail loudly with the complete old index
-    at ``.precompact`` and recovery steps in the error — no
-    silent-loss path remains, only loud aborts."""
-    import shutil
-
-    expected = set(
-        (list(range(BOOTSTRAP_EPOCH, hwm + 1)) if hwm is not None else [])
-        + extras
-    )
+    SWAPPED BACK in place and the caller retries)."""
+    expected = set(snapshot.epochs())
     if set(committed_epochs(index_path)) != expected:
         shutil.rmtree(tmp, ignore_errors=True)
         raise RuntimeError(
             f"{op} aborted: new epochs committed under "
             f"{index_path!r} during the rewrite; retry"
         )
-    old = index_path + ".precompact"
-    shutil.rmtree(old, ignore_errors=True)
-    os.replace(index_path, old)
-    if set(committed_epochs(old)) != expected:
-        shutil.rmtree(tmp, ignore_errors=True)
-        try:
-            os.replace(old, index_path)
-        except OSError as exc:
-            # An appender recreated index_path in the rename-aside
-            # window: replace over a non-empty dir raises ENOTEMPTY.
-            # Same loud-abort-with-recovery contract as the forward
-            # swap below — the good index must never be stranded
-            # behind a raw OSError.
+
+    def recheck(old: str) -> None:
+        if set(committed_epochs(old)) != expected:
             raise RuntimeError(
-                f"{op} swap-back failed ({exc}); an appender recreated "
-                f"{index_path!r} mid-restore. The complete pre-swap "
-                f"index is at {old!r} — quiesce writers, merge or "
-                f"discard the recreated dir, then rename {old!r} back "
-                f"to {index_path!r}"
-            ) from exc
-        raise RuntimeError(
-            f"{op} aborted: an epoch committed under "
-            f"{index_path!r} during the swap; the old index was "
-            "restored in place — retry at a quieter moment"
-        )
-    try:
-        os.replace(tmp, index_path)
-    except OSError as exc:
-        raise RuntimeError(
-            f"{op} swap failed ({exc}); an appender recreated "
-            f"{index_path!r} mid-swap. The complete pre-swap index is at "
-            f"{old!r} — quiesce writers, merge or discard the recreated "
-            f"dir, then rename {old!r} back to {index_path!r}"
-        ) from exc
-    shutil.rmtree(old, ignore_errors=True)
+                f"{op} aborted: an epoch committed under "
+                f"{index_path!r} during the swap; the old index was "
+                "restored in place — retry at a quieter moment"
+            )
+
+    swap_dir(index_path, tmp, index_path + ".precompact", op, recheck)
 
 
 def health_rebuild_trigger(
@@ -950,18 +803,7 @@ def maybe_compact(
     returns the new watermark, or returns None without touching the
     index. A fully-dead index (live=0, suppressed>0) fires; an empty
     or tombstone-free index never does."""
-    if max_suppressed_num < 0 or max_suppressed_den < 1:
-        raise ValueError(
-            "threshold num/den must be >= 0 / >= 1, got "
-            f"{max_suppressed_num}/{max_suppressed_den}"
-        )
-    totals = index_health(spark, index_path).agg(
-        F.coalesce(F.sum("live_rows"), F.lit(0)).alias("live"),
-        F.coalesce(F.sum("suppressed_rows"), F.lit(0)).alias("dead"),
-    ).collect()[0]  # bounded: one row
-    if int(totals["dead"]) * max_suppressed_den > (
-        int(totals["live"]) * max_suppressed_num
-    ):
+    if health_rebuild_trigger(max_suppressed_num, max_suppressed_den)(spark, index_path):
         return compact_index(spark, index_path)
     return None
 
@@ -1014,12 +856,9 @@ def rebuild_index(
       replay-skip contract survives the rebuild exactly as it
       survives compaction: a Structured Streaming restart that
       re-delivers any pre-rebuild epoch_id still skips it.
-    - swap = ``_checked_swap``: same lock (``_acquire_maintenance_
-      lock`` — a rebuild and a compaction can never race), same
-      double recheck + swap-back (a concurrent append ABORTS the
-      swap with the old index back in place), same loud-failure
-      residue story; readers raise on ``.compacting``/``.precompact``
-      residue mid-swap instead of serving empty.
+    - swap = ``_checked_swap`` under the same ``<index>.compact.lock``
+      as ``compact_index`` (a rebuild and a compaction can never
+      race), with the same aborts, residue and reader behavior.
     - a LEDGER GAP (a crashed epoch below a committed one) REFUSES
       the rebuild: folding everything to the bootstrap epoch would
       mark the crashed epoch committed and skip its replay forever
@@ -1043,20 +882,17 @@ def rebuild_index(
         train_ivf_centroids,
     )
 
-    lock = _acquire_maintenance_lock(index_path)
-    try:
-        hwm, extras = _ledger_state(index_path)
-        if hwm is None and not extras:
+    ledger = EpochLedger(index_path)
+    index_path = ledger.root
+    with maintenance_lock(index_path + ".compact.lock"):
+        st = ledger.state()
+        if st.hwm is None and not st.extras:
             raise ValueError(f"nothing committed under {index_path!r}")
-        floor = hwm if hwm is not None else BOOTSTRAP_EPOCH - 1
-        new_hwm = floor
-        es = set(extras)
-        while new_hwm + 1 in es:
-            new_hwm += 1
-        if any(e > new_hwm for e in extras):
+        new_hwm = st.prefix_end()
+        if any(e > new_hwm for e in st.extras):
             raise ValueError(
                 f"rebuild_index refused: ledger gap under {index_path!r} "
-                f"(committed epochs {sorted(es)} above watermark "
+                f"(committed epochs {st.extras} above watermark "
                 f"{new_hwm}) — a crashed epoch is still awaiting replay, "
                 "and folding past it would skip that replay forever; "
                 "drain the stream, then rebuild"
@@ -1116,28 +952,8 @@ def rebuild_index(
             else None
         )
         cb = _collect_codebook(surviving, id_col, emb_col, n_centroids)
-        cell_col, codes_col = _cell_and_codes(cb, cent, bits, m_dims, emb_col)
-
-        import shutil
-
-        tmp = index_path + ".compacting"
-        shutil.rmtree(tmp, ignore_errors=True)
-        (
-            surviving.select(
-                F.col(id_col).alias("vec_id"),
-                cell_col.alias("cell"),
-                codes_col.alias("codes"),
-                F.lit(BOOTSTRAP_EPOCH).alias("epoch"),
-            )
-            .repartition("cell")
-            .write.mode("overwrite")
-            .partitionBy("cell", "epoch")
-            .parquet(tmp)
-        )
-        os.makedirs(os.path.join(tmp, _LEDGER), exist_ok=True)
-        with open(_hwm_path(tmp, new_hwm), "w") as fh:
-            fh.write("committed-through")
-        _checked_swap(index_path, tmp, hwm, extras, op="rebuild_index")
+        rows = _encode(surviving, cb, cent, bits, m_dims, id_col, emb_col, BOOTSTRAP_EPOCH)
+        _swap_in(index_path, rows, st, new_hwm, [], "rebuild_index")
         if artifact_path is not None:
             write_codebook(
                 artifact_path, centroids=cent, codebook=cb,
@@ -1148,5 +964,3 @@ def rebuild_index(
             )
         return {"fired": True, "hwm": new_hwm, "centroids": cent,
                 "codebook": cb}
-    finally:
-        os.remove(lock)

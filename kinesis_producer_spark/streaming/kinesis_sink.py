@@ -39,6 +39,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from kinesis_producer_spark.commit import EpochLedger, local_root, write_atomic
+
 MAX_RECORDS_PER_CALL = 500
 MAX_BYTES_PER_CALL = 5 * 1024 * 1024
 MAX_BYTES_PER_RECORD = 1024 * 1024
@@ -653,21 +655,13 @@ class KinesisSink:
         ``ack_path``: Structured Streaming re-invokes foreachBatch with
         the SAME epoch_id after a failure, and without a ledger a
         replayed epoch double-sends to Kinesis and double-appends acks.
-        The marker is created atomically ('x' open) AFTER the ack write
-        commits, so the guarantee is the standard idempotent-commit
-        shape: replays of a committed epoch are skipped entirely;
-        a crash before the marker re-sends (at-least-once to the
-        transport, whose dedup key is the record md5 in the acks).
-        Requires ``ack_path``. Local-FS ledger here; an object-store
-        deployment swaps in a conditional-put on the same layout.
-
-        ``ack_path`` must be a LOCAL path: the ack parquet write would
-        accept any Hadoop-FS URI, but the epoch-commit marker and the
-        ``_sink_metrics`` JSON ledger use local-FS primitives
-        (atomic 'x'-open / os.replace) — a remote URI would silently
-        write markers to a literal local directory named after the
-        scheme while acks went remote, splitting the ledger from the
-        data. Rejected up front instead.
+        The ``commit.EpochLedger`` marker is created AFTER the ack
+        write commits, so the guarantee is the standard
+        idempotent-commit shape: replays of a committed epoch are
+        skipped entirely; a crash before the marker re-sends
+        (at-least-once to the transport, whose dedup key is the record
+        md5 in the acks). Requires ``ack_path``, which must pass
+        ``commit.local_root`` (the ledger is local-FS).
 
         Layout migration (round 5): ack rows are now written
         PARTITIONED BY epoch (``epoch=N/`` subdirs). A pre-round-5
@@ -691,30 +685,11 @@ class KinesisSink:
         """
         if exactly_once and not ack_path:
             raise ValueError("exactly_once requires ack_path (the ledger lives there)")
-        if ack_path:
-            import re
-
-            m = re.match(r"^([a-zA-Z][a-zA-Z0-9+.-]*)://", ack_path)
-            if m and m.group(1).lower() != "file":
-                raise ValueError(
-                    f"ack_path scheme '{m.group(1)}' is not supported: the "
-                    "epoch-commit marker and _sink_metrics ledger use "
-                    "local-FS atomics; use a local path (object-store "
-                    "deployments swap in a conditional-put ledger on the "
-                    "same layout)"
-                )
-            if m:  # file:// → strip the scheme so os.* and Spark agree
-                ack_path = ack_path[len("file://") :]
+        ack_path = ack_path and local_root(ack_path)
+        ledger = EpochLedger(ack_path) if exactly_once else None
 
         def write(batch_df: DataFrame, epoch_id: int) -> None:
-            import os
-
-            marker = (
-                os.path.join(ack_path, "_epoch_ledger", f"epoch-{epoch_id}")
-                if ack_path
-                else None
-            )
-            if exactly_once and marker and os.path.exists(marker):
+            if ledger is not None and ledger.committed(epoch_id):
                 print(f"kinesis sink: epoch {epoch_id} already committed, skipping replay")
                 return
             try:
@@ -750,10 +725,8 @@ class KinesisSink:
                     )
                 else:
                     acks.foreach(lambda _: None)  # force the send
-                if exactly_once and marker:
-                    os.makedirs(os.path.dirname(marker), exist_ok=True)
-                    with open(marker, "x") as fh:
-                        fh.write("committed")
+                if ledger is not None:
+                    ledger.commit(epoch_id)
             except Exception as exc:  # noqa: BLE001
                 print(f"kinesis sink: batch {epoch_id} failed: {exc}")
                 if exactly_once:
@@ -833,7 +806,4 @@ class KinesisSink:
             "dead_internal": row["dead_internal"],
             "dead_terminal": row["dead_terminal"],
         }
-        tmp = os.path.join(mdir, f".epoch-{epoch_id}.tmp")
-        with open(tmp, "w") as fh:
-            json.dump(payload, fh)
-        os.replace(tmp, os.path.join(mdir, f"epoch-{epoch_id}.json"))
+        write_atomic(os.path.join(mdir, f"epoch-{epoch_id}.json"), json.dumps(payload))

@@ -11,11 +11,11 @@ public Kinesis consumer semantics:
   transport made persistent — successful records land in per-shard
   block files with monotonically increasing per-shard sequence
   numbers (the stream's persisted log that GetRecords reads). Blocks
-  are claimed with an atomic hard-link publish (write the complete
-  block to a temp file, ``os.link`` it to the next free index, losers
-  retry the next index), so concurrent executor tasks serialize per
-  shard without a lock server AND readers only ever observe complete
-  blocks. Failed put attempts never land — a throttled record is not
+  are claimed with ``commit.claim_next`` (the complete block is
+  hard-linked to the next free index; losers retry the next index),
+  so concurrent executor tasks serialize per shard without a lock
+  server AND readers only ever observe complete blocks. Failed put
+  attempts never land — a throttled record is not
   in the stream; its successful retry is (exactly the AWS contract).
 - **shard iterators**: ``get_shard_iterator`` / ``get_records`` mirror
   the AWS pagination shape — TRIM_HORIZON / AFTER_SEQUENCE_NUMBER
@@ -35,11 +35,11 @@ public Kinesis consumer semantics:
   incremental consumer refuses to read a child until its parents are
   exhausted.
 - **at-least-once + dedup on SequenceNumber**: ``ShardCheckpoint``
-  stores per-shard positions (atomic replace). ``consume_new_records``
-  returns records strictly AFTER the stored positions; a crash between
-  read and commit re-reads the same records (at-least-once), and the
-  position filter is the dedup — a committed sequence number is never
-  served again.
+  stores per-shard positions (``commit.write_atomic``).
+  ``consume_new_records`` returns records strictly AFTER the stored
+  positions; a crash between read and commit re-reads the same records
+  (at-least-once), and the position filter is the dedup — a committed
+  sequence number is never served again.
 
 At 100 TB the shard logs are object-store prefixes and the block scan
 is the same partitioned read; the iterator/position layer is bounded
@@ -53,10 +53,11 @@ import base64
 import hashlib
 import json
 import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from kinesis_producer_spark.commit import claim_next, write_atomic
 
 from kinesis_producer_spark.streaming.kinesis_sink import (
     MAX_BYTES_PER_CALL,
@@ -106,7 +107,7 @@ class FileStreamTransport(Transport):
         self.sync_topology()
 
     def sync_topology(self) -> None:
-        """Persist the shard topology snapshot (atomic replace) so
+        """Persist the shard topology snapshot (``write_atomic``) so
         consumers see parent/child lineage — the DescribeStream
         output, as a file. Called at construction (every producer
         task refreshes it) and after driver-side resharding."""
@@ -119,36 +120,24 @@ class FileStreamTransport(Transport):
             }
             for sid, s in self.shard_map.shards.items()
         }
-        tmp = os.path.join(self.stream_dir, f".topo-{uuid.uuid4().hex}")
-        with open(tmp, "w") as fh:
-            json.dump(doc, fh, sort_keys=True)
-        os.replace(tmp, os.path.join(self.stream_dir, _TOPOLOGY))
+        write_atomic(
+            os.path.join(self.stream_dir, _TOPOLOGY), json.dumps(doc, sort_keys=True)
+        )
 
     def _publish_block(self, shard_id: str, rows: list[dict]) -> int:
         """Write one complete block for a shard and atomically claim
         the next free block index for it. Returns the block index."""
         sdir = os.path.join(self.stream_dir, shard_id)
         os.makedirs(sdir, exist_ok=True)
-        tmp = os.path.join(sdir, f".tmp-{uuid.uuid4().hex}")
         # the block's sequence numbers depend on the claimed index, so
         # rows carry only (i, pk, d); seq is derived on read from the
         # block filename + line index — the file content never needs
         # to know which index it won
-        with open(tmp, "w") as fh:
-            for r in rows:
-                fh.write(json.dumps(r, sort_keys=True) + "\n")
-        k = sum(
-            1 for name in os.listdir(sdir) if name.startswith("block-")
+        return claim_next(
+            "".join(json.dumps(r, sort_keys=True) + "\n" for r in rows),
+            lambda k: os.path.join(sdir, f"block-{k:0{_BLOCK_W}d}.jsonl"),
+            sum(1 for name in os.listdir(sdir) if name.startswith("block-")),
         )
-        while True:
-            target = os.path.join(sdir, f"block-{k:0{_BLOCK_W}d}.jsonl")
-            try:
-                os.link(tmp, target)  # atomic claim + complete content
-                break
-            except FileExistsError:
-                k += 1
-        os.unlink(tmp)
-        return k
 
     def put_records(self, stream_name: str, records: list[dict]) -> dict:
         if len(records) > MAX_RECORDS_PER_CALL:
@@ -414,16 +403,10 @@ class ShardCheckpoint:
     def done_ranges(self) -> list[list[int]]:
         return self._doc()["done_ranges"]
 
-    def _write(self, doc: dict) -> None:
-        tmp = self.path + f".tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as fh:
-            json.dump(doc, fh, sort_keys=True)
-        os.replace(tmp, self.path)
-
     def commit(self, positions: dict[str, str]) -> None:
         doc = self._doc()
         doc["positions"].update(positions)
-        self._write(doc)
+        write_atomic(self.path, json.dumps(doc, sort_keys=True))
 
     def gc(self, stream_dir: str) -> int:
         """Retire every CLOSED shard whose records are all consumed
@@ -447,7 +430,7 @@ class ShardCheckpoint:
             doc["done_ranges"] = _merge_ranges(
                 done + [[n, n] for n in retired]
             )
-            self._write(doc)
+            write_atomic(self.path, json.dumps(doc, sort_keys=True))
         return len(retired)
 
 

@@ -1267,6 +1267,7 @@ def q260_streaming_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
     import uuid
 
+    from kinesis_producer_spark.commit import publish_staged_file
     from kinesis_producer_spark.operators.similarity import (
         ivf_pq_topk_from_index,
     )
@@ -1293,22 +1294,10 @@ def q260_streaming_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
             ("b1", F.col("vec_id") % 20 == 0),
             ("b2", F.col("vec_id") % 20 == 10),
         ):
-            stage = os.path.join(tempfile.gettempdir(), f"ann_stage_{run}_{tag}")
-            (
-                e.filter(pred)
-                .select("vec_id", "embedding")
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(stage)
-            )
-            (part,) = [
-                f for f in os.listdir(stage) if f.endswith(".parquet")
-            ]
-            os.replace(
-                os.path.join(stage, part),
+            publish_staged_file(
+                e.filter(pred).select("vec_id", "embedding"),
                 os.path.join(stream_dir, f"{tag}.parquet"),
             )
-            shutil.rmtree(stage, ignore_errors=True)
             arrivals = (
                 spark.readStream.schema("vec_id long, embedding array<float>")
                 .parquet(stream_dir)
@@ -1375,6 +1364,7 @@ def q272_streaming_ann_queries(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
     import uuid
 
+    from kinesis_producer_spark.commit import publish_staged_file
     from kinesis_producer_spark.operators.ann_artifacts import (
         cached_index_dir,
     )
@@ -1407,24 +1397,10 @@ def q272_streaming_ann_queries(spark: SparkSession, sf_dir: str) -> DataFrame:
             centroids=cent, nprobe=nprobe,
         )
         for tag, ids in (("b1", [0, 1]), ("b2", [2])):
-            stage = os.path.join(
-                tempfile.gettempdir(), f"ann_qstage_{run}_{tag}"
-            )
-            (
-                e.filter(F.col("vec_id").isin(ids))
-                .select("vec_id")
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(stage)
-            )
-            (part,) = [
-                f for f in os.listdir(stage) if f.endswith(".parquet")
-            ]
-            os.replace(
-                os.path.join(stage, part),
+            publish_staged_file(
+                e.filter(F.col("vec_id").isin(ids)).select("vec_id"),
                 os.path.join(stream_dir, f"{tag}.parquet"),
             )
-            shutil.rmtree(stage, ignore_errors=True)
             arrivals = spark.readStream.schema("vec_id long").parquet(
                 stream_dir
             )
@@ -2385,6 +2361,7 @@ def q294_streaming_rebuild_maintenance(
     import tempfile
     import uuid
 
+    from kinesis_producer_spark.commit import publish_staged_file
     from kinesis_producer_spark.operators.ann_artifacts import read_codebook
     from kinesis_producer_spark.operators.similarity import (
         ivf_pq_topk_from_index,
@@ -2444,16 +2421,8 @@ def q294_streaming_rebuild_maintenance(
         # machinery was ~40% of this query's wall at sf0.1). Identical
         # epochs, identical writer-object state across batches.
         for i, (tag, bdf) in enumerate(batches):
-            stage = os.path.join(
-                tempfile.gettempdir(), f"ann_maint_stage_{run}_{tag}"
-            )
-            bdf.coalesce(1).write.mode("overwrite").parquet(stage)
-            (part,) = [
-                f for f in os.listdir(stage) if f.endswith(".parquet")
-            ]
             dst = os.path.join(stream_dir, f"{tag}.parquet")
-            os.replace(os.path.join(stage, part), dst)
-            shutil.rmtree(stage, ignore_errors=True)
+            publish_staged_file(bdf, dst)
             # the file source orders batches by modification time —
             # pin it so b0..b3 arrive in CDC order on any filesystem
             os.utime(dst, (1_000_000_000 + 10 * i, 1_000_000_000 + 10 * i))
